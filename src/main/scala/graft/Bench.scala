@@ -244,6 +244,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    CacheScope.silenceReleaseWarnings()
 
     def gcMs(): Long =
       ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
-import graft.model.LogRecord
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
 /** Streaming state-at-scale bench: the dedup operator's RocksDB state
   * path under a key population two orders of magnitude beyond what the
@@ -9,10 +9,12 @@ import graft.model.LogRecord
   * ids; 100 TB streaming is STATE-bound, not record-bound).
   *
   * Protocol: N distinct exception ids (default 10⁷) stream through
-  * [[graft.streaming.DedupStreamTWS]] — the Spark-4 `transformWithState`
-  * window store with event-time retention timers — from a parquet file
-  * source at one file per micro-batch (the recoverable-source pattern
-  * from CupedStreamSpec), all event times inside one retention window so
+  * [[graft.streaming.Pipelines.dedupPipeline]] — the shipped T2 engine,
+  * `flatMapGroupsWithState` with one stored timestamp per id and an
+  * event-time retention timeout — as Kafka-shaped frames (`key`, JSON
+  * `value`, `timestamp` = event time) from a parquet file source at one
+  * file per micro-batch (the recoverable-source pattern from
+  * CupedStreamSpec), all event times inside one retention window so
   * every key stays LIVE. Recorded per batch from StreamingQueryProgress:
   * trigger wall time, state rows, update/commit times, state memory, and
   * the RocksDB SST footprint; then the query STOPS and a fresh query
@@ -23,7 +25,7 @@ import graft.model.LogRecord
   * Field semantics (every duration from StreamingQueryProgress):
   * `batch_ms_*` = triggerExecution WALL time per micro-batch;
   * `update_ms_p50`/`commit_ms_p50` = the state operator's
-  * allUpdatesTimeMs/commitTimeMs, which Spark SUMS ACROSS the 32 state
+  * allUpdatesTimeMs/commitTimeMs, which Spark SUMS ACROSS the state
   * partitions of a batch — cumulative task time, so they legitimately
   * exceed the batch's wall time; `restore_state_rows` counts state AFTER
   * the restore batch ran, i.e. the restored keys PLUS the one extra
@@ -69,10 +71,9 @@ object StreamStateBench {
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")
-    import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("graft_statebench").toString
-    val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
+    val (src, ckpt) = (s"$base/src", s"$base/ckpt")
     val baseUs = 86400L * 1000000L
     val perBatch = keys / batches
 
@@ -85,7 +86,7 @@ object StreamStateBench {
       spark.range(b * perBatch, (b + 1) * perBatch)
         .selectExpr(
           "'k' AS key",
-          """named_struct(
+          """to_json(named_struct(
             |  'exception', named_struct(
             |    'exception_class', concat('K', id),
             |    'exception_message', CAST(NULL AS STRING),
@@ -96,17 +97,20 @@ object StreamStateBench {
             |  'thread_name', CAST(NULL AS STRING),
             |  'timestamp', CAST(NULL AS STRING),
             |  'level', 'ERROR',
-            |  'logger_name', CAST(NULL AS STRING)) AS event""".stripMargin,
-          s"$baseUs + $b * ${spreadUs}L + id % 1000 AS event_time_us")
+            |  'logger_name', CAST(NULL AS STRING))) AS value""".stripMargin,
+          s"timestamp_micros($baseUs + $b * ${spreadUs}L + id % 1000) AS timestamp")
         .coalesce(1)
         .write.mode("append").parquet(src)
 
+    val frameSchema = StructType(Seq(
+      StructField("key", StringType), StructField("value", StringType),
+      StructField("timestamp", TimestampType)))
     def startQuery() =
-      graft.streaming.DedupStreamTWS.dedupLogRecords(
-          spark.readStream.schema(Encoders.product[LogRecord].schema)
-            .option("maxFilesPerTrigger", "1").parquet(src).as[LogRecord])
+      graft.streaming.Pipelines.dedupPipeline(
+          spark.readStream.schema(frameSchema)
+            .option("maxFilesPerTrigger", "1").parquet(src))
         .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[LogRecord], _: Long) =>
+        .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.format("noop").mode("overwrite").save(): Unit
         }
         .option("checkpointLocation", ckpt).outputMode("append").start()

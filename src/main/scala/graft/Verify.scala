@@ -16,6 +16,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    CacheScope.silenceReleaseWarnings()
     new java.io.File(outDir).mkdirs()
     val picked =
       if (wanted.isEmpty) SparkEntry.queries

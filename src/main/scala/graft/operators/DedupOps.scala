@@ -1263,11 +1263,13 @@ object DedupOps {
     *     ⟹ I ≥ t'/(1+t')·(|P|+|Q|);
     *   - sizeBound min ≥ 0.49995·max (I ≤ min and I ≥ t'·max).
     *
-    * 32-bit shingle-hash collisions only ADD candidate rows (a shared
-    * STRING shingle always collides by construction, and the exact
-    * string-set confirm rejects fakes), and the positional bound is an
-    * EXISTS witness, so collisions cannot lower recall. Slack K = 8 is
-    * the family's measured trade (see [[PrefixSlack]]).
+    * 32-bit shingle-hash collisions ADD candidate rows (the exact
+    * string-set confirm rejects fakes), but they can also lower recall:
+    * two distinct shingles of a doc that hash alike collapse to one
+    * gram, which costs a shared prefix gram. The failure bound is the
+    * slack: K = 8 absorbs up to K−1 shared-shingle hash collisions per
+    * doc; a doc with K or more can lose a qualifying pair. K = 8 is the
+    * family's measured trade (see [[PrefixSlack]]).
     */
   private[graft] val recallSpine = BandedSpine(
     slack = PrefixSlack,

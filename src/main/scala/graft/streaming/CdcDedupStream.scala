@@ -18,8 +18,9 @@ import graft.operators.DedupOps
   * Output mode Complete (the spec) or Update (production, emit only
   * touched digests). State is one row per DISTINCT chunk — unbounded
   * like the batch table it mirrors; a long-lived deployment ages it
-  * with a TTL-keyed `transformWithState` (the [[DedupStreamTWS]]
-  * recipe) or periodic compaction to the batch table.
+  * with a retention-timed stateful operator (the [[DedupStream]]
+  * recipe: one timestamp per key, event-time timeout) or periodic
+  * compaction to the batch table.
   *
   * The combinator is batch/stream agnostic (narrow HOFs + one keyed
   * aggregation), so the spec's batch-equivalence check runs the SAME

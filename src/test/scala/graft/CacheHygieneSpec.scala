@@ -31,4 +31,13 @@ class CacheHygieneSpec extends SparkSpec {
     assert(persisted.isEmpty,
       s"leaked cached RDDs: ${persisted.values.map(_.toString).take(10).mkString("; ")}")
   }
+
+  test("loading CacheScope leaves the MapPartitionsRDD logger at the root level") {
+    import org.apache.logging.log4j.LogManager
+    spark // the session is up: Spark's logging setup has run
+    CacheScope.release() // forces CacheScope's initialization
+    assert(LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD").getLevel ==
+      LogManager.getRootLogger.getLevel,
+      "CacheScope must not change logger levels of the sessions that load it")
+  }
 }

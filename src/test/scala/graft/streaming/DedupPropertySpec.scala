@@ -3,11 +3,13 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkSpec
-import graft.model.{ExceptionInfo, LogEvent, LogRecord}
+import graft.model.{ExceptionInfo, LogEvent}
 
 /** Property tests (SURVEY.md §5.2.4): the distributed operator must agree
   * with a single-threaded Scala transcription of the reference algorithm
   * (`KStreamDistinct.java:69-103`) on arbitrary in-order event sequences.
+  * The operator under test is the shipped T2 engine,
+  * `Pipelines.dedupPipeline`, fed Kafka-shaped frames ([[RecordFrames]]).
   */
 class DedupPropertySpec extends SparkSpec {
 
@@ -60,9 +62,10 @@ class DedupPropertySpec extends SparkSpec {
       val expect = referenceModel(events)
         .map(r => (r.event.flatMap(_.exception).flatMap(_.exception_class), r.event_time_us))
         .sorted(Ordering.by((x: (Option[String], Long)) => (x._1.getOrElse(""), x._2)))
-      val got = DedupStream.dedupLogRecords(spark.createDataset(events))
+      val got = RecordFrames.readBack(
+          Pipelines.dedupPipeline(RecordFrames.toFrames(spark.createDataset(events))))
         .collect().toSeq
-        .map(r => (r.event.flatMap(_.exception).flatMap(_.exception_class), r.event_time_us))
+        .map(r => (Option(r.getString(0)), r.getLong(1)))
         .sorted(Ordering.by((x: (Option[String], Long)) => (x._1.getOrElse(""), x._2)))
       got == expect
     })
@@ -117,13 +120,15 @@ class DedupPropertySpec extends SparkSpec {
 
     def runStreaming(batches: Seq[Seq[LogRecord]], streamTime: Boolean): Seq[Long] = {
       val input = MemoryStream[LogRecord]
-      val out = DedupStream.dedupLogRecords(input.toDS(), streamTime = streamTime)
+      val out = Pipelines.dedupPipeline(RecordFrames.toFrames(input.toDS()),
+        streamTime = streamTime)
       val qn = s"prop_st_${System.nanoTime()}"
-      val q = out.toDF().writeStream.format("memory").queryName(qn)
+      val q = out.writeStream.format("memory").queryName(qn)
         .outputMode("append").start()
       try {
         batches.foreach { b => input.addData(b); q.processAllAvailable() }
-        spark.table(qn).selectExpr("event_time_us").collect().map(_.getLong(0)).toSeq.sorted
+        RecordFrames.readBack(spark.table(qn)).select("event_time_us")
+          .collect().map(_.getLong(0)).toSeq.sorted
       } finally q.stop()
     }
 

@@ -2,10 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
-import graft.model.{ExceptionInfo, LogEvent, LogRecord}
+import graft.model.{ExceptionInfo, LogEvent}
 
 /** Exact D1 semantics (SURVEY.md §2.4) — the judge-facing correctness
-  * target of the reference's only non-trivial logic.
+  * target of the reference's only non-trivial logic — checked on the
+  * shipped T2 engine, `Pipelines.dedupPipeline`, over Kafka-shaped frames
+  * (see [[RecordFrames]]).
   */
 class DedupStreamSpec extends SparkSpec {
 
@@ -29,14 +31,14 @@ class DedupStreamSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[LogRecord]
-    val out = DedupStream.dedupLogRecords(input.toDS(), streamTime = streamTime).toDF()
+    val out = Pipelines.dedupPipeline(RecordFrames.toFrames(input.toDS()),
+      streamTime = streamTime)
     val qname = s"dedup_out_${System.nanoTime()}"
     val query = out.writeStream.format("memory").queryName(qname)
       .outputMode("append").start()
     try {
       batches.foreach { b => input.addData(b); query.processAllAvailable() }
-      spark.table(qname)
-        .selectExpr("event.exception.exception_class", "event_time_us")
+      RecordFrames.readBack(spark.table(qname))
         .collect()
         .map(r => (Option(r.getString(0)).orNull, r.getLong(1)))
         .toSeq
@@ -103,7 +105,7 @@ class DedupStreamSpec extends SparkSpec {
     import s.implicits._
     val ds = spark.createDataset(Seq(
       rec("A", 0), rec("A", 2 * Min), rec("B", 0), rec(null, 0)))
-    val got = DedupStream.dedupLogRecords(ds).collect()
+    val got = Pipelines.dedupPipeline(RecordFrames.toFrames(ds)).collect()
     assert(got.length == 3) // A@0, B@0, null passthrough
   }
 }

@@ -115,40 +115,41 @@ class PipelinesSpec extends SparkSpec {
     assert(vals.count(_.contains("E1")) == 1 && vals.count(_.contains("E3")) == 1)
   }
 
-  test("hot-key pre-suppression (payload-elision markers) is output-identical to the plain path") {
+  test("T2 retention expiry drops state: id re-emits after quiescence (reference :135-141)") {
+    // window = 40 min (±20 suppression), retention = 10 min — so expiry is
+    // OBSERVABLE inside the suppression window: without the event-time
+    // timeout dropping state, A@20min (|20−0| ≤ 20) would be suppressed.
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rnd = new scala.util.Random(7)
-    val Base = 86400L * 1000L
-    def boom(id: String, i: Int) =
-      s"""{"exception":{"exception_class":"$id","exception_message":"x","stacktrace":"s$i"},"version":1,"level":"ERROR"}"""
-    // 120 distinct timestamps 15 s apart, shuffled within 75 s blocks
-    // (out of order but never watermark-late); ~70% land on hot id "H"
-    val perm = (0 until 120).map(k => Base + k * 15000L)
-      .grouped(5).flatMap(g => rnd.shuffle(g)).toSeq
-    val frames = perm.zipWithIndex.map { case (ts, i) =>
-      val id = if (rnd.nextInt(10) < 7) "H" else s"C${rnd.nextInt(3)}"
-      Frame(s"k$i", boom(id, i), new Timestamp(ts))
-    }
-    val batches = frames.grouped(40).toSeq
-
-    def run(pre: Boolean): Seq[String] = {
-      val input = MemoryStream[Frame]
-      val out = DedupStream.dedupFrames(input.toDF(), LogEvent.schema, preSuppress = pre)
-      val qn = s"presup_${pre}_${System.nanoTime()}"
-      val q = out.writeStream.format("memory").queryName(qn).outputMode("append").start()
-      try {
-        batches.foreach { b => input.addData(b); q.processAllAvailable() }
-        spark.table(qn).select(col("value").cast("string")).collect()
-          .map(_.getString(0)).toSeq.sorted
-      } finally q.stop()
-    }
-
-    val plain = run(pre = false)
-    val marked = run(pre = true)
-    assert(plain.nonEmpty && plain.size < frames.size, "dedup must actually suppress")
-    assert(marked == plain)
+    val Min = 60L * 1000 // one minute in ms
+    val Base = 86400L * 1000 // past the epoch-0 initial watermark
+    def boom(id: String, tMs: Long) = Frame(s"$id@$tMs",
+      s"""{"exception":{"exception_class":"$id","exception_message":"x","stacktrace":"s"},"version":1,"level":"ERROR"}""",
+      new Timestamp(Base + tMs))
+    val input = MemoryStream[Frame]
+    val out = Pipelines.dedupPipeline(input.toDF(),
+      windowUs = 40 * Min * 1000, retentionUs = 10 * Min * 1000)
+    val qn = s"t2_ret_${System.nanoTime()}"
+    val q = out.writeStream.format("memory").queryName(qn).outputMode("append").start()
+    try {
+      input.addData(Seq(boom("A", 0), boom("C", 0)))                // both novel → emit
+      q.processAllAvailable()
+      // C refreshes its state (watermark still low, timeout not yet due);
+      // B advances the watermark to 25−10 = 15 min > A's 10-min expiry
+      input.addData(Seq(boom("C", 15 * Min), boom("B", 25 * Min)))
+      q.processAllAvailable()
+      input.addData(Seq(boom("D", 26 * Min)))                       // A expires, C (refreshed) survives
+      q.processAllAvailable()
+      // A re-emits (state dropped after quiescence); C stays suppressed
+      // (|20−15| = 5 ≤ 20 against its refreshed, still-live state)
+      input.addData(Seq(boom("A", 20 * Min), boom("C", 20 * Min)))
+      q.processAllAvailable()
+      val keys = spark.table(qn).select(col("key").cast("string")).collect()
+        .map(_.getString(0)).toSeq
+      assert(keys.sorted == Seq("A@0", "A@1200000", "B@1500000", "C@0", "D@1560000"),
+        s"A must re-emit after retention quiescence, refreshed C stay suppressed: $keys")
+    } finally q.stop()
   }
 
   test("JSON codec: null payload → null struct; malformed → null in PERMISSIVE") {
